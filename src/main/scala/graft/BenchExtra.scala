@@ -42,8 +42,7 @@ object BenchExtra {
     require(sel.nonEmpty, s"no queries match ${args.mkString(",")}")
 
     val needsEngine = sel.exists { case (n, _) =>
-      val id = n.take(3).drop(1).toInt
-      (id >= 30 && id <= 37) || id == 44 || (id >= 46 && id <= 50) || id == 35
+      SparkEntry.queryId(n).exists(SparkEntry.EngineQueryIds)
     }
     if (needsEngine) {
       val e0 = System.nanoTime()

@@ -23,6 +23,14 @@ object SparkEntry {
       graft.queries.Engine.all ++
       graft.queries.Cue.all
 
+  /** Numeric id of a query name (`q07_foo` → 7). */
+  def queryId(name: String): Option[Int] =
+    "^q(\\d+)".r.findFirstMatchIn(name).map(_.group(1).toInt)
+
+  /** Ids of the queries that read the flagship crawl engine, whose
+    * tables must be built before any of them runs. */
+  val EngineQueryIds: Set[Int] = graft.queries.Engine.all.keySet.flatMap(queryId)
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Engine-backed queries (q30-q37, q44-q50)
     * read the raw snapshot-table dumps Verify writes to a SIBLING dir

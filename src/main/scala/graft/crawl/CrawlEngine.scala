@@ -130,9 +130,9 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     // hence bucket — never changes, so resolution stays bucket-closed
     bucketBy = if (cfg.claimMode == "bucketed") Some(("host", cfg.claimBuckets))
                else None,
-    // the claim's pending-base scan is cache-resident between
-    // append/compaction events (readStates fast path) — per-batch claims
-    // read columnar memory, not parquet
+    // the claim's pending-base scans and the gate's key scans stay
+    // cache-resident per data file (SnapshotTable.scanCache) — per-batch
+    // claims and gates read columnar memory, not parquet
     cacheStateScans = true)
   // uncompressed parquet for the payload table: the `bytes` column is
   // canonical PNG — already deflate-compressed — so the default snappy
@@ -446,16 +446,12 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     val shardSnapshot = phase("enqueue-probe")(
       if (seen.useJoinPath) None else Some(seen.snapshotBytes()))
     val firstOcc = Frontier.firstOccurrence(entries)
-    // all keys live in base files (appends introduce every key; deltas
-    // only revise them) — a raw single-column scan, no merge resolution.
-    // CACHE-RESIDENT between base-set changes: the gate verifies against
-    // this set every batch, but the base-file set only changes on an
-    // append or a compaction — at steady state (saturated discovery)
-    // that is once per compaction cycle, so the per-batch key scan
-    // becomes an in-memory columnar read instead of re-decoding every
-    // base file. The same structure at design scale is the cluster-
-    // resident verify set a 1000-executor crawl keeps pinned (8 B/key).
-    val keys = cachedKeys()
+    // the gate verifies against every key ever enqueued: the frontier's
+    // base-file key column, served from its scan cache — an in-memory
+    // columnar read per batch, not a re-decode of every base file. At
+    // design scale this is the cluster-resident verify set a
+    // 1000-executor crawl keeps pinned (8 B/key).
+    val keys = seenSet
     val bigKeyTable = frontier.currentManifest
       .exists(_.files.iterator.map(_.bytes).sum > CrawlEngine.BigKeyTableBytes)
     val useBcastGate = boundedCandidates && bigKeyTable
@@ -491,40 +487,6 @@ final class CrawlEngine(spark: SparkSession, workDir: String,
     }
     fresh.unpersist()
     n
-  }
-
-  /** Memo of `frontier.readKeys()` keyed by the base-file set (the only
-    * files that scan reads). Single-writer engine, so a plain volatile
-    * pair suffices; the superseded cache is unpersisted eagerly.
-    *
-    * INCREMENTAL (r6): an append only EXTENDS the base-file list, so
-    * the cached scan stays valid as the stable prefix — the gate then
-    * verifies against cache ∪ pruned-scan(appended files) instead of
-    * re-reading and re-caching the WHOLE key table every batch (every
-    * discovery batch appends, so the old exact-signature key made the
-    * gate's verify scan O(table) per batch — the other half of the
-    * large-fill growth term, VERDICT r5 weak #a). The fresh tail is
-    * bounded by the compaction cadence; compaction rewrites paths and
-    * forces the full rebuild below. */
-  @volatile private var keysCache: (Seq[String], DataFrame) = null
-  private def cachedKeys(): DataFrame = {
-    if (frontier.currentId.isEmpty) {
-      import spark.implicits._
-      return spark.emptyDataset[Long].toDF("fp")
-    }
-    val sig = frontier.baseFilePaths
-    val c = keysCache
-    if (c != null && c._1 == sig) c._2
-    else if (c != null && sig.size > c._1.size &&
-             sig.take(c._1.size) == c._1 &&
-             sig.size - c._1.size <= SnapshotTable.IncrementalScanMaxFiles) {
-      c._2.unionByName(frontier.readKeysFiles(sig.drop(c._1.size)))
-    } else {
-      if (c != null) c._2.unpersist()
-      val df = frontier.readKeys().cache()
-      keysCache = (sig, df)
-      df
-    }
   }
 
   private val timing = sys.env.contains("SPARK_GRAFT_BATCH_TIMING")

@@ -222,7 +222,8 @@ object Frontier {
     * breaking whole-stage codegen between the discovery explode and the
     * first-occurrence aggregation. Each scalar has a bit-identical
     * column twin: `Hashing.fpCol`/`hostCol` (pinned by CodecHashSpec),
-    * and the robots decision re-derives `Synth.unit(key) < 0.05` as
+    * and the robots decision re-derives
+    * `Synth.unit(key) < Synth.RobotsDisallowRate` as
     * `shiftrightunsigned(xxhash64(key), 11) / 2^53` — the same XXH64
     * kernel and the same IEEE ops (pinned by SourcesOpsSpec's twin
     * test; the single-threaded parity oracle keeps using the scalars,
@@ -236,11 +237,11 @@ object Frontier {
     // which keep the whole string as path on both sides)
     val path = when(!col("__c").rlike("(?s)://"),
       col("__c")).otherwise(regexp_replace(col("__c"), "(?s)^.*?://[^/]*", ""))
-    // Synth.unit(s"policy:$seed:robots:$host") < 0.05, column form
+    // Synth.unit(Synth.robotsKey(seed) + host) < RobotsDisallowRate, column form
     val robots =
-      shiftrightunsigned(xxhash64(concat(lit(s"policy:$seed:robots:"), col("host"))), 11)
-        .cast("double") / lit((1L << 53).toDouble) < 0.05
-    val disallowed = robots && path.startsWith("/v/")
+      shiftrightunsigned(xxhash64(concat(lit(Synth.robotsKey(seed)), col("host"))), 11)
+        .cast("double") / lit((1L << 53).toDouble) < Synth.RobotsDisallowRate
+    val disallowed = robots && path.startsWith(Synth.RobotsDisallowPrefix)
     urls.toDF()
       .withColumn("__c", c)
       .withColumn("fp", xxhash64(col("__c")))

@@ -119,26 +119,96 @@ class SnapshotTableSpec extends AnyFunSuite {
 
   test("incremental state-scan cache: append-extended file sets read correctly") {
     import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    // the files behind every cached block of the table at `dir`: each
+    // persisted RDD's lineage walked down to its parquet scan
+    def cachedFiles(dir: String): Set[String] = {
+      def files(r: org.apache.spark.rdd.RDD[_]): Seq[String] = r match {
+        case f: org.apache.spark.sql.execution.datasources.FileScanRDD =>
+          f.filePartitions.flatMap(_.files.map(_.filePath.toUri.getPath))
+        case _ => r.dependencies.flatMap(d => files(d.rdd))
+      }
+      spark.sparkContext.getPersistentRDDs.values.flatMap(files).toSet
+        .filter(_.startsWith(dir + "/"))
+    }
+    // after every step: the cache-served view equals the unpruned read,
+    // every base file read so far is resident, and no cached block
+    // outlives its file's stay in the manifest
+    def check(t: SnapshotTable, dir: String, got: Seq[(Long, String)], c: String): Unit = {
+      val want = t.read().filter(col("st") === "todo").select("k", c)
+        .as[(Long, String)].collect().sortBy(_._1).toSeq
+      assert(got === want)
+      assert(t.readKeys().as[Long].collect().sorted.toSeq ===
+        t.read().select("k").as[Long].collect().sorted.toSeq)
+      val m = t.currentManifest.get
+      val cached = cachedFiles(dir)
+      val stale = cached -- m.files.map(f => s"$dir/${f.path}")
+      assert(stale.isEmpty, s"cached blocks of files no longer in the manifest: $stale")
+      val bases = m.files.filter(_.kind == "base").map(f => s"$dir/${f.path}").toSet
+      assert(bases.subsetOf(cached), s"base files read but not cached: ${bases -- cached}")
+    }
     // cacheStateScans on — the claim fast path; appends must be served
-    // by cache ∪ fresh-tail without a stale or duplicated view
-    val t = new SnapshotTable(spark, freshDir(), "k", tagCol = Some("st"),
+    // by the per-file cache without a stale or duplicated view
+    val dir = freshDir()
+    val t = new SnapshotTable(spark, dir, "k", tagCol = Some("st"),
       frozenTags = Set("done"), cacheStateScans = true)
     def rows(i: Long) = Seq((i, s"v$i", "todo")).toDF("k", "v", "st")
     t.commitAppend(rows(1))
     def wanted = t.readStates(Set("todo")).select("k", "v")
       .as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(wanted === Seq((1L, "v1")))      // builds the cache
-    t.commitAppend(rows(2))                  // incremental tail 1 file
-    t.commitAppend(rows(3))                  // incremental tail 2 files
+    assert(wanted === Seq((1L, "v1")))      // caches the first file
+    check(t, dir, wanted, "v")
+    t.commitAppend(rows(2))                  // each appended file is cached
+    t.commitAppend(rows(3))                  // on its first read
     assert(wanted === Seq((1L, "v1"), (2L, "v2"), (3L, "v3")))
+    check(t, dir, wanted, "v")
     // a delta flipping a row out of the wanted tag shadows it through
     // the UNCACHED shadow-key side, on top of the cached base
     t.commitUpsert(Seq((2L, "v2", "done")).toDF("k", "v", "st"))
     assert(wanted === Seq((1L, "v1"), (3L, "v3")))
-    // equivalence with the unpruned read at every step
-    val full = t.read().filter(org.apache.spark.sql.functions.col("st") === "todo")
-      .select("k", "v").as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(full === wanted)
+    check(t, dir, wanted, "v")
+    // compaction rewrites every active file: the old ones leave the
+    // manifest and their blocks with them
+    assert(t.compactIfNeeded(maxDeltaCommits = 0).isDefined)
+    assert(wanted === Seq((1L, "v1"), (3L, "v3")))
+    check(t, dir, wanted, "v")
+    // drain: every wanted row goes terminal, so after the next compaction
+    // no wanted file is left and the read returns early
+    t.commitUpsert(Seq((1L, "v1", "done"), (3L, "v3", "done")).toDF("k", "v", "st"))
+    assert(t.compactIfNeeded(maxDeltaCommits = 0).isDefined)
+    assert(t.statesReadPlan(Set("todo")).full.isEmpty)
+    assert(wanted === Seq.empty)
+    check(t, dir, wanted, "v")
+
+    // bucketed: a bucket whose wanted rows all go terminal stops
+    // participating, and its cached scans are released
+    val bdir = freshDir()
+    val bt = new SnapshotTable(spark, bdir, "k", tagCol = Some("st"),
+      frozenTags = Set("done"), bucketBy = Some(("host", 3)), cacheStateScans = true)
+    def hostRows(ks: Seq[Long]) = ks.map(k => (k, s"h${k % 6}", "todo")).toDF("k", "host", "st")
+    def bucketWanted: Seq[(Long, String)] = {
+      val scans = bt.bucketedStateScan(Set("todo")).map(_._2)
+      if (scans.isEmpty) Seq.empty
+      else scans.reduce(_ unionByName _)
+        .withColumn("__rn", row_number().over(
+          Window.partitionBy("k").orderBy(col("__delta_seq").desc)))
+        .filter(col("__rn") === 1 && col("__cand")).select("k", "host")
+        .as[(Long, String)].collect().sortBy(_._1).toSeq
+    }
+    bt.commitAppend(hostRows(1L to 12L))
+    check(bt, bdir, bucketWanted, "host")
+    bt.commitAppend(hostRows(13L to 18L))
+    check(bt, bdir, bucketWanted, "host")
+    val b0 = bt.currentManifest.get.files.find(_.tag == "todo").get.bucket
+    val flipped = bt.read().filter(pmod(hash(col("host")), lit(3)) === b0)
+      .withColumn("st", lit("done"))
+    bt.commitUpsert(flipped)
+    check(bt, bdir, bucketWanted, "host")
+    assert(bt.compactIfNeeded(maxDeltaCommits = 0).isDefined)
+    assert(!bt.currentManifest.get.files.exists(f => f.tag == "todo" && f.bucket == b0))
+    assert(!bt.bucketedStateScan(Set("todo")).map(_._1).contains(b0))
+    check(bt, bdir, bucketWanted, "host")
   }
 
   test("compaction preserves the resolved view and drops deltas") {
